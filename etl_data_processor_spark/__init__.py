@@ -26,7 +26,10 @@ surveyed in SURVEY.md), generalized into a tested operator library:
 - ``ops.profile`` — one-scan data profiling + portable histograms.
 - ``ops.cdc``     — MERGE-style upsert and SCD2 history (shuffle-free snapshot).
 - ``ops.enrich``  — chunked, rate-limited, error-isolated batch enrichment
-                    (distinct → mapInPandas → left-join-back) with pluggable client.
+                    (distinct → mapInPandas → left-join-back) with pluggable client;
+                    the input is cached because both the distinct keys and the
+                    join back read it (released by ``spark.catalog.clearCache()``
+                    or ``unpersist``).
 - ``ops.asof``    — as-of / range joins.
 - ``ops.multimodal`` — binary-blob column plumbing (decode stubbed).
 - ``streaming``   — Structured Streaming windows/watermark/session/dedup + CDC sink.

@@ -22,7 +22,7 @@ def map_lookup(keys_values: dict, key: Column) -> Column:
     """Literal-map lookup (B29) — the reference's month map (main.py:29-42)
     as a broadcastable ``create_map`` expression."""
     m = F.create_map(*[F.lit(x) for kv in keys_values.items() for x in kv])
-    return m.getItem(key)
+    return m[key]  # NULL for a missing key
 
 
 # ---------------------------------------------------------------- vector math

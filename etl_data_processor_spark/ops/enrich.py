@@ -15,6 +15,12 @@ Spark-first shape:
   deterministic fallback rows instead of failing the job (main.py:213-214).
 - Left join back on the key; at 100 TB the distinct side is far smaller
   than the fact side, so the join is usually broadcast-able.
+- The input is cached: two consumers read it (the distinct keys and the
+  fact side of the join back), and without the cache Spark re-runs the
+  whole upstream lineage (e.g. a DOM-parsing mapInPandas) once per
+  consumer. The cache lives until ``spark.catalog.clearCache()`` or
+  ``unpersist`` on the input frame, so narrow the input to the columns
+  the caller needs before enriching.
 
 The client is pluggable: production would wrap an LLM/HTTP service;
 ``deterministic_stub_client`` keeps tests and oracles exact.
@@ -63,6 +69,10 @@ def batch_enrich(
     ``result_schema`` must contain ``key_col`` plus the enrichment columns.
     Fallback rows (chunk failure / client miss) carry NULLs, which the final
     join fills from ``defaults`` (coalesce), mirroring main.py:297-303.
+
+    ``df`` is cached (two consumers below), so its upstream runs once per
+    action; release it with ``spark.catalog.clearCache()`` or
+    ``df.unpersist()``.
     """
     field_names = [f.name for f in result_schema.fields if f.name != key_col]
 
@@ -88,6 +98,7 @@ def batch_enrich(
                     )
             yield pd.DataFrame(rows, columns=[key_col] + field_names)
 
+    df = df.cache()  # two consumers below: the distinct keys and the join back
     distinct_keys = df.select(key_col).distinct()
     enriched = distinct_keys.mapInPandas(enrich_partition, result_schema)
 

@@ -96,7 +96,7 @@ def normalize_danish_date(text: Column) -> Column:
     month_map = F.create_map(
         *[F.lit(x) for kv in DANISH_MONTHS.items() for x in kv]
     )
-    month = month_map.getItem(month_name)
+    month = month_map[month_name]  # NULL for a missing month
     return F.when(
         (day != "") & month.isNotNull(),
         F.concat_ws("-", year, month, F.lpad(day, 2, "0")),

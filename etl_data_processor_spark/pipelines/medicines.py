@@ -7,8 +7,8 @@ with the network/LLM stages replaced by deterministic equivalents:
   scan cards          -> input DataFrame (url, card_text, heading, detail_text)
   A4  url normalize   -> conditional base-URL concat (main.py:114-118)
   A5  classify        -> first-match-wins regex w/ lookbehind (main.py:121-131)
-      drop unmatched  -> status IS NULL rows dropped (main.py:127-133)
-  A12 filter          -> status IN (Anbefalet, Delvist anbefalet) (main.py:258-260)
+  A12 filter          -> status IN (Anbefalet, Delvist anbefalet) (main.py:258-260);
+                         unmatched rows (status NULL, main.py:127-133) drop too
   A7  split heading   -> (raw_drug_text, indication head) (main.py:147-156)
   A8  indication fb   -> coalesce with detail-text label (main.py:161-169)
   A9/A10 date         -> Danish month normalize, then d.m.yyyy fallback
@@ -21,9 +21,12 @@ with the network/LLM stages replaced by deterministic equivalents:
                          (main.py:307-327)
   A17 sink            -> write_csv (main.py:329-331; BOM dropped)
 
-Every stage is a Column expression or the Arrow-batched enrichment operator —
-the whole pipeline is one Catalyst plan plus one mapInPandas stage and would
-run unchanged over a 100 TB card dump.
+Every stage is a Column expression or an Arrow-batched Python pass. Driven
+from raw HTML (``cards_from_html``) the job has three Python passes: the
+listing-page card extraction, the detail-page extraction and the enrichment.
+Each runs once per job: batch_enrich caches its narrowed input, which both
+the distinct keys and the join back read. The pipeline would run unchanged
+over a 100 TB card dump.
 """
 
 from __future__ import annotations
@@ -72,13 +75,14 @@ def run_pipeline(cards: DataFrame, client_factory=None) -> DataFrame:
     # A4: absolutize relative urls
     df = cards.withColumn("url", S.conditional_concat(F.col("url"), BASE_URL))
 
-    # A5: classify, first-match-wins incl. negative lookbehind; unmatched rows
-    # are dropped (extract_decision_from_card returns None -> skipped)
+    # A5: classify, first-match-wins incl. negative lookbehind
     df = df.withColumn(
         "status", S.classify_first_match(F.col("card_text"), S.DECISION_PATTERNS)
-    ).filter(F.col("status").isNotNull())
+    )
 
-    # A12: approved-only filter
+    # A12: approved-only filter. It also drops the unmatched rows
+    # (extract_decision_from_card returns None -> skipped), since isin(NULL)
+    # is NULL; one filter evaluates the classifier chain once per card.
     df = df.filter(F.col("status").isin("Anbefalet", "Delvist anbefalet"))
 
     # A7: split heading on first separator -> (raw drug text, indication head)
@@ -107,9 +111,10 @@ def run_pipeline(cards: DataFrame, client_factory=None) -> DataFrame:
     df = df.withColumn("atc_code", S.extract_atc_code(F.col("detail_text")))
 
     # A13+A14+A15: distinct -> chunked stub enrichment -> left join back with
-    # the reference's miss defaults (active_ingredient=raw text, trade_name='')
+    # the reference's miss defaults (active_ingredient=raw text, trade_name='').
+    # batch_enrich caches its input, so pass only the columns the output uses.
     df = batch_enrich(
-        df,
+        df.select("raw_drug_text", "indication", "decision_date", "atc_code"),
         key_col="raw_drug_text",
         result_schema=_ENRICH_SCHEMA,
         client_factory=client_factory,

@@ -21,23 +21,37 @@ SCHEMA = StructType(
 
 def test_batch_enrich_distinct_and_joinback(spark):
     """Distinct-before-expensive (A13): the client must see each distinct key
-    once even when the fact side repeats it."""
-    calls = []
+    once even when the fact side repeats it, and the input's upstream (here
+    a row-counting mapInPandas) must run once per row for one action, though
+    both the distinct keys and the join back read it."""
+    sc = spark.sparkContext
+    keys_seen = {t: sc.accumulator(0) for t in ("drug one", "drug two")}
+    upstream_rows = sc.accumulator(0)
 
     rows = [(i, "drug one") if i % 2 == 0 else (i, "drug two") for i in range(10)]
     df = spark.createDataFrame(rows, ["row_id", "text"])
 
+    def count_rows(batches):
+        for pdf in batches:
+            upstream_rows.add(len(pdf))
+            yield pdf
+
     def factory():
         def client(texts):
-            calls.append(len(texts))
+            for t in texts:
+                keys_seen[t].add(1)
             return {t: {"active_ingredient": t.split()[0].upper(), "trade_name": t.split()[1]} for t in texts}
         return client
 
-    out = batch_enrich(df, "text", SCHEMA, client_factory=factory).collect()
+    out = batch_enrich(
+        df.mapInPandas(count_rows, df.schema), "text", SCHEMA, client_factory=factory
+    ).collect()
     assert len(out) == 10
     by_text = {r.text: (r.active_ingredient, r.trade_name) for r in out}
     assert by_text["drug one"] == ("DRUG", "one")
     assert by_text["drug two"] == ("DRUG", "two")
+    assert {t: a.value for t, a in keys_seen.items()} == {"drug one": 1, "drug two": 1}
+    assert upstream_rows.value == 10
 
 
 def test_batch_enrich_error_isolation_and_defaults(spark):
@@ -67,13 +81,17 @@ def test_batch_enrich_error_isolation_and_defaults(spark):
 @pytest.mark.slow
 def test_batch_enrich_chunking(spark):
     """Chunk size bounds each client call (A14, chunk loop main.py:188-193)."""
-    seen = []
+    sc = spark.sparkContext
+    keys_seen = {f"text {i}": sc.accumulator(0) for i in range(10)}
+    oversized_calls = sc.accumulator(0)
 
     df = spark.createDataFrame([(i, f"text {i}") for i in range(10)], ["row_id", "text"])
 
     def factory():
         def client(texts):
-            seen.append(len(texts))
+            oversized_calls.add(int(len(texts) > 3))
+            for t in texts:
+                keys_seen[t].add(1)
             return {t: {"active_ingredient": t.upper(), "trade_name": ""} for t in texts}
         return client
 
@@ -81,8 +99,9 @@ def test_batch_enrich_chunking(spark):
         df.coalesce(1), "text", SCHEMA, client_factory=factory, chunk_size=3
     ).collect()
     assert len(out) == 10
-    # driver can't see executor-side lists; assert via result completeness
     assert all(r.active_ingredient == r.text.upper() for r in out)
+    assert oversized_calls.value == 0
+    assert all(a.value == 1 for a in keys_seen.values())
 
 
 def test_asof_backward_basic(spark):

@@ -379,6 +379,29 @@ def test_tpch_q21_single_fact_pass_via_cache(spark, sf_dir):
     assert len(re.findall(r"orders\.parquet", plan)) == 1
 
 
+def test_medicines_single_html_pass_via_cache(spark, tmp_path):
+    """The medicines job from raw HTML: batch_enrich's two consumers (the
+    distinct keys and the join back) read one cached frame, so each HTML
+    input is scanned, and DOM-parsed, once rather than once per consumer."""
+    import re
+
+    from etl_data_processor_spark.pipelines.medicines import (
+        cards_from_html,
+        run_pipeline,
+        synthetic_html_site,
+    )
+
+    for name, frame in zip(("listing", "details"), synthetic_html_site(spark, 40)):
+        frame.write.parquet(str(tmp_path / f"{name}.parquet"))
+    listing = spark.read.parquet(str(tmp_path / "listing.parquet"))
+    details = spark.read.parquet(str(tmp_path / "details.parquet"))
+    plan = plan_of(run_pipeline(cards_from_html(listing, details)))
+    spark.catalog.clearCache()
+    assert "InMemoryRelation" in plan
+    assert len(re.findall(r"Location:.*listing\.parquet", plan)) == 1
+    assert len(re.findall(r"Location:.*details\.parquet", plan)) == 1
+
+
 def test_tpch_q1_partial_final_agg_and_pushdown(spark, sf_dir):
     """Q1: the date cutoff must reach the parquet scan, the eight
     aggregates must plan partial+final (map-side combine collapses each
