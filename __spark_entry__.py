@@ -12,37 +12,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_data_processor_spark.flagship import flagship_q3
-from etl_data_processor_spark import queries as _q_core  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_north as _q_north  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_rel2 as _q_rel2  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_corpus as _q_corpus  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_ts as _q_ts  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_tpch as _q_tpch  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_tpch2 as _q_tpch2  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_cdc as _q_cdc  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_ext as _q_ext  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_ext2 as _q_ext2  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_ext3 as _q_ext3  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_html as _q_html  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r3 as _q_r3  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r4 as _q_r4  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r5 as _q_r5  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r6 as _q_r6  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r6b as _q_r6b  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r6c as _q_r6c  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r6d as _q_r6d  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r6e as _q_r6e  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r6f as _q_r6f  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r6g as _q_r6g  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r6h as _q_r6h  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r6i as _q_r6i  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r6j as _q_r6j  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r7 as _q_r7  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r7b as _q_r7b  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r8 as _q_r8  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r9 as _q_r9  # noqa: F401 (registers)
-from etl_data_processor_spark import queries_r10 as _q_r10  # noqa: F401 (registers)
 from etl_data_processor_spark import registry as _registry
+
+_registry.load_all()
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -23,27 +23,6 @@ def _setup_logging() -> logging.Logger:
     return logger
 
 
-def _import_all_query_modules() -> None:
-    """Populate the registry with EVERY query module (the CLI previously
-    imported only three and silently hid the rest of the registry)."""
-    from etl_data_processor_spark import (  # noqa: F401
-        queries,
-        queries_cdc,
-        queries_corpus,
-        queries_ext,
-        queries_ext2,
-        queries_ext3,
-        queries_html,
-        queries_north,
-        queries_r3,
-        queries_r4,
-        queries_r5,
-        queries_rel2,
-        queries_tpch,
-        queries_tpch2,
-        queries_ts,
-    )
-
 def main(argv: list[str] | None = None) -> int:
     parser = argparse.ArgumentParser(prog="etl_data_processor_spark")
     sub = parser.add_subparsers(dest="cmd", required=True)
@@ -100,8 +79,9 @@ def main(argv: list[str] | None = None) -> int:
         import inspect
         import os
 
-        _import_all_query_modules()
-        from etl_data_processor_spark.registry import ORACLE, QUERIES
+        from etl_data_processor_spark.registry import ORACLE, QUERIES, load_all
+
+        load_all()
 
         pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         for name in sorted(QUERIES):
@@ -190,8 +170,9 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "query":
-        _import_all_query_modules()
-        from etl_data_processor_spark.registry import QUERIES
+        from etl_data_processor_spark.registry import QUERIES, load_all
+
+        load_all()
 
         if args.name not in QUERIES:
             log.error("unknown query %r (see `list`)", args.name)

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_data_processor_spark.ops import kernels as K
+
 
 def _find_repartition_node(jplan):
     """Pre-order search of a JVM logical-plan tree for the TOPMOST explicit
@@ -657,9 +659,6 @@ def _word_shingles_fn(texts, k: int):
     return pd.Series(out)
 
 
-_SHINGLES_UDFS: dict = {}
-
-
 def word_shingles(text: Column, k: int = 3) -> Column:
     """Distinct word k-gram shingles as array<string>.
 
@@ -670,14 +669,7 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     stage (~2.5-7.5 executor-cpu-s per pass at sf0.1). Values are
     bit-identical (differential-pinned in tests), so every downstream —
     prefix sort, exact-Jaccard verify, minhash — is unchanged."""
-    if k not in _SHINGLES_UDFS:
-        from pyspark.sql.types import ArrayType, StringType
-
-        def _fn(texts, _k=k):
-            return _word_shingles_fn(texts, _k)
-
-        _SHINGLES_UDFS[k] = F.pandas_udf(_fn, ArrayType(StringType()))
-    return _SHINGLES_UDFS[k](text)
+    return K.pandas_udf(_word_shingles_fn, "array<string>", k)(text)
 
 
 def with_shingles(
@@ -751,7 +743,7 @@ def _minhash_sigs_expr(hashes: Column, params: list[tuple[int, int]], p: int) ->
     )
 
 
-def _minhash_sigs_fn(hash_arrays, params: list, p: int):
+def _minhash_sigs_fn(hash_arrays, params: tuple, p: int):
     """MinHash signatures from per-doc base-hash arrays, one vectorized
     numpy pass per Arrow batch (r11, guide §4.2) — the exact integers of
     :func:`_minhash_sigs_expr`: base hashes are < 2^31 (masked xxhash64)
@@ -764,37 +756,18 @@ def _minhash_sigs_fn(hash_arrays, params: list, p: int):
     import numpy as np
     import pandas as pd
 
-    a = np.array([x for x, _ in params], dtype=np.int64)[None, :]
-    b = np.array([x for _, x in params], dtype=np.int64)[None, :]
-    n = len(hash_arrays)
-    out: list = [None] * n
-    lens = np.zeros(n, dtype=np.int64)
-    arrs: list = [None] * n
-    for j, h in enumerate(hash_arrays):
-        if h is not None:
-            arrs[j] = np.asarray(h, dtype=np.int64)
-            lens[j] = len(arrs[j])
-    j = 0
-    while j < n:
-        k, tot = j, 0
-        while k < n and (tot == 0 or tot + lens[k] <= (1 << 17)):
-            tot += int(lens[k])
-            k += 1
-        idx = [i for i in range(j, k) if lens[i] > 0]
-        if idx:
-            flat = np.concatenate([arrs[i] for i in idx])
-            vals = (flat[:, None] * a + b) % p
-            ln = lens[idx]
-            starts = np.zeros(len(idx), dtype=np.int64)
-            np.cumsum(ln[:-1], out=starts[1:])
-            mins = np.minimum.reduceat(vals, starts, axis=0)
-            for t, i in enumerate(idx):
-                out[i] = mins[t].tolist()
-        j = k
+    a = np.array([x for x, _ in params], dtype=np.int64)
+    b = np.array([x for _, x in params], dtype=np.int64)
+    arrs = [np.asarray(h, dtype=np.int64) for h in hash_arrays if h is not None]
+    lens = np.array([0 if h is None else len(h) for h in hash_arrays], dtype=np.int64)
+    flat = np.concatenate([np.empty(0, dtype=np.int64), *arrs])
+    out: list = [None] * len(lens)
+    for docs, elems in K.segments(lens, 1 << 17):
+        vals = (flat[elems, None] * a + b) % p
+        mins = K.segment_reduce(np.minimum, vals, lens[docs]).tolist()
+        for i, m in zip(np.flatnonzero(lens[docs]) + docs.start, mins):
+            out[i] = m
     return pd.Series(out)
-
-
-_MINHASH_SIGS_UDFS: dict = {}
 
 
 def _minhash_sigs_col(hashes: Column, params: list[tuple[int, int]], p: int) -> Column:
@@ -802,15 +775,7 @@ def _minhash_sigs_col(hashes: Column, params: list[tuple[int, int]], p: int) -> 
     nested-HOF permutation scan — 32 x |shingles| lambda evaluations per
     doc — moved to one vectorized Arrow pass; values bit-identical,
     differential-pinned in tests)."""
-    key = (tuple(params), p)
-    if key not in _MINHASH_SIGS_UDFS:
-        from pyspark.sql.types import ArrayType, LongType
-
-        def _fn(hs, _params=list(params), _p=p):
-            return _minhash_sigs_fn(hs, _params, _p)
-
-        _MINHASH_SIGS_UDFS[key] = F.pandas_udf(_fn, ArrayType(LongType()))
-    return _MINHASH_SIGS_UDFS[key](hashes)
+    return K.pandas_udf(_minhash_sigs_fn, "array<bigint>", tuple(params), p)(hashes)
 
 
 def minhash_signatures(
@@ -1064,12 +1029,6 @@ def ngram_jaccard_pairs_blocked(
     )
 
 
-def _bit_value(bit: int) -> int:
-    """Two's-complement signed-long value with only ``bit`` set (bit 63 is
-    the sign bit, so its value is -2^63 — a bare 1<<63 overflows LongType)."""
-    return (1 << bit) if bit < 63 else -(1 << 63)
-
-
 def _simhash_votes_fn(hash_arrays):
     """64-bit SimHash signatures from per-doc token-hash arrays, one
     vectorized numpy pass per Arrow batch (r11, guide §4.2).
@@ -1079,170 +1038,53 @@ def _simhash_votes_fn(hash_arrays):
     exact xxhash64 longs the signature has always been built from —
     only the 64-per-token interpreted zip_with vote loop moves to
     numpy). Per doc: bit b of the signature is set iff
-    ``#{h: bit b set} * 2 > n_tokens`` — algebraically identical to the
-    old ``sum(+/-1) > 0`` majority vote, all-integer, deterministic.
+    ``#{h: bit b set} * 2 > n_tokens`` (:func:`kernels.majority_bits`)
+    — algebraically identical to the old ``sum(+/-1) > 0`` majority
+    vote, all-integer, deterministic.
 
     Edges mirror the old expression chain exactly: a NULL hash array
     (null text) yields NULL; an EMPTY array yields 0 (all votes tie at
-    0, no bit set). Memory: per-bit counting unpacks 64 int32 lanes, so
-    docs are processed in <=2^18-hash chunks (~64 MB peak) regardless
-    of batch size."""
+    0, no bit set)."""
     import numpy as np
     import pandas as pd
 
-    shifts = np.arange(64, dtype=np.uint64)
-    n = len(hash_arrays)
-    out = np.zeros(n, dtype=np.uint64)
-    isnull = np.zeros(n, dtype=bool)
-    lens = np.zeros(n, dtype=np.int64)
-    arrs: list = [None] * n
-    for j, a in enumerate(hash_arrays):
-        if a is None:
-            isnull[j] = True
-        else:
-            arrs[j] = np.asarray(a, dtype=np.int64)
-            lens[j] = len(arrs[j])
-    j = 0
-    while j < n:
-        k, tot = j, 0
-        while k < n and (tot == 0 or tot + lens[k] <= (1 << 18)):
-            tot += int(lens[k])
-            k += 1
-        idx = [i for i in range(j, k) if lens[i] > 0]
-        if idx:
-            flat = np.concatenate([arrs[i] for i in idx]).view(np.uint64)
-            bits = ((flat[:, None] >> shifts) & np.uint64(1)).astype(np.int32)
-            ln = lens[idx]
-            starts = np.zeros(len(idx), dtype=np.int64)
-            np.cumsum(ln[:-1], out=starts[1:])
-            c1 = np.add.reduceat(bits, starts, axis=0)
-            sigbits = (2 * c1.astype(np.int64)) > ln[:, None]
-            sigs = (sigbits.astype(np.uint64) << shifts).sum(
-                axis=1, dtype=np.uint64
-            )
-            out[idx] = sigs
-        j = k
-    res = pd.Series(out.view(np.int64)).astype("Int64")
-    if isnull.any():
-        res[isnull] = pd.NA
-    return res
-
-
-_CF_M32 = 1 << 32
+    arrs = [np.asarray(h, dtype=np.int64) for h in hash_arrays if h is not None]
+    lens = np.array([0 if h is None else len(h) for h in hash_arrays], dtype=np.int64)
+    flat = np.concatenate([np.empty(0, dtype=np.int64), *arrs]).view(np.uint64)
+    sigs = K.majority_bits(flat, lens, 64).view(np.int64)
+    return pd.Series(sigs).astype("Int64").mask(hash_arrays.isna().to_numpy())
 
 
 def _charfold_simhash_fn(texts, bases: tuple):
     """Portable charfold SimHash signatures (one 32-bit signature per
-    base) from raw text, one vectorized numpy pass per Arrow batch
-    (r11, guide §4.2) — the exact integers of the expression chain in
-    q_simhash_portable / q_simhash64_portable: tokens from
-    split(lower(trim(text)), \\s+) (== ``str.lower().split()`` on this
-    corpus — the proven pair_clip_gram_counts equivalence; the
+    base, columns ``s0, s1, ...``) from raw text, one vectorized numpy
+    pass per Arrow batch (r11, guide §4.2) — the exact integers of the
+    expression chain in q_simhash_portable / q_simhash64_portable:
+    tokens from split(lower(trim(text)), \\s+) (== ``str.lower().split()``
+    on this corpus — the proven pair_clip_gram_counts equivalence; the
     empty-text [''] token folds to h=0 whose all-zero bits vote -1
     everywhere, the same signature 0 the empty token list yields here);
-    per-token hash = Horner fold (a*base + code) % 2^32 over ``ascii()``
-    char codes, evaluated as code * base^(len-1-j) sums — every
-    intermediate < 2^51, exact in uint64; per-bit majority votes as in
+    per-token hash = Horner fold (a*base + code) % 2^32 over the code
+    points (:func:`kernels.segment_poly_hash`, exact for every code
+    point; JVM parity holds for BMP characters, whose code point is
+    what ``ascii()`` returns); per-bit majority votes as in
     :func:`_simhash_votes_fn`. NULL text yields NULL (the expression
-    chain's null propagation). Non-ASCII bytes fall back to the exact
-    per-char Python fold (ord == the codepoint ascii() returns)."""
+    chain's null propagation)."""
     import numpy as np
     import pandas as pd
 
-    m32 = np.uint64(_CF_M32)
-    shifts32 = np.arange(32, dtype=np.uint64)
-    n = len(texts)
-    cols = [np.zeros(n, dtype=np.uint64) for _ in bases]
-    isnull = np.zeros(n, dtype=bool)
-    doc_ntoks = np.zeros(n, dtype=np.int64)
-    all_toks: list = []
-    for j, t in enumerate(texts):
-        if t is None:
-            isnull[j] = True
-            continue
-        w = t.lower().split()
-        doc_ntoks[j] = len(w)
-        all_toks.extend(w)
-    if all_toks:
-        joined = "".join(all_toks)
-        tok_lens = np.array([len(t) for t in all_toks], dtype=np.int64)
-        try:
-            raw = joined.encode("ascii")
-            buf = np.frombuffer(raw, dtype=np.uint8).astype(np.uint64)
-            ascii_ok = True
-        except UnicodeEncodeError:
-            ascii_ok = False
-        tok_ends = np.cumsum(tok_lens)
-        tok_starts = tok_ends - tok_lens
-        ne = tok_lens > 0  # .split() yields no empty tokens, but guard
-        hs_per_base = []
-        for base in bases:
-            if ascii_ok:
-                maxlen = int(tok_lens.max())
-                powtab = np.empty(maxlen, dtype=np.uint64)
-                powtab[0] = 1
-                for i in range(1, maxlen):
-                    powtab[i] = (powtab[i - 1] * np.uint64(base)) % m32
-                tok_idx = np.repeat(
-                    np.arange(len(all_toks), dtype=np.int64), tok_lens
-                )
-                e = tok_ends[tok_idx] - 1 - np.arange(len(buf), dtype=np.int64)
-                contrib = buf * powtab[e]
-                hs = np.zeros(len(all_toks), dtype=np.uint64)
-                if ne.any():
-                    sums = np.add.reduceat(contrib, tok_starts[ne])
-                    hs[ne] = sums % m32
-            else:  # exact scalar fallback (ord == ascii() codepoint)
-                hs = np.array(
-                    [
-                        _py_charfold(t, base) for t in all_toks
-                    ],
-                    dtype=np.uint64,
-                )
-            hs_per_base.append(hs)
-        # per-doc majority votes, chunked like _simhash_votes_fn
-        doc_ends = np.cumsum(doc_ntoks)
-        doc_starts = doc_ends - doc_ntoks
-        for bi, hs in enumerate(hs_per_base):
-            out = cols[bi]
-            j = 0
-            while j < n:
-                k, tot = j, 0
-                while k < n and (tot == 0 or tot + doc_ntoks[k] <= (1 << 18)):
-                    tot += int(doc_ntoks[k])
-                    k += 1
-                idx = [i for i in range(j, k) if doc_ntoks[i] > 0]
-                if idx:
-                    seg = hs[doc_starts[idx[0]]:doc_ends[idx[-1]]]
-                    bits = ((seg[:, None] >> shifts32) & np.uint64(1)).astype(
-                        np.int32
-                    )
-                    ln = doc_ntoks[idx]
-                    starts = np.zeros(len(idx), dtype=np.int64)
-                    np.cumsum(ln[:-1], out=starts[1:])
-                    c1 = np.add.reduceat(bits, starts, axis=0)
-                    sigbits = (2 * c1.astype(np.int64)) > ln[:, None]
-                    out[idx] = (sigbits.astype(np.uint64) << shifts32).sum(
-                        axis=1, dtype=np.uint64
-                    )
-                j = k
-    res = []
-    for col in cols:
-        s = pd.Series(col.view(np.int64)).astype("Int64")
-        if isnull.any():
-            s[isnull] = pd.NA
-        res.append(s)
-    return res
-
-
-def _py_charfold(tok: str, base: int) -> int:
-    h = 0
-    for c in tok:
-        h = (h * base + ord(c)) % _CF_M32
-    return h
-
-
-_CHARFOLD_SIMHASH_UDFS: dict = {}
+    isnull = texts.isna().to_numpy()
+    words = [t.lower().split() for t in texts[~isnull]]
+    ntoks = np.zeros(len(texts), dtype=np.int64)
+    ntoks[~isnull] = [len(w) for w in words]
+    units, lens = K.code_units([t for w in words for t in w])
+    return pd.DataFrame({
+        f"s{i}": pd.Series(
+            K.majority_bits(K.segment_poly_hash(units, lens, base, 32), ntoks, 32)
+            .view(np.int64)
+        ).astype("Int64").mask(isnull)
+        for i, base in enumerate(bases)
+    })
 
 
 def charfold_simhash(text: Column, bases: tuple = (31,)):
@@ -1251,26 +1093,8 @@ def charfold_simhash(text: Column, bases: tuple = (31,)):
     per-bit expression chains (differential-pinned in
     tests/test_r11_ops.py). Returns a struct column with fields
     ``s0, s1, ...`` (one per base)."""
-    key = tuple(bases)
-    if key not in _CHARFOLD_SIMHASH_UDFS:
-        import pandas as pd
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        schema = StructType(
-            [StructField(f"s{i}", LongType()) for i in range(len(key))]
-        )
-
-        def _fn(texts, _bases=key):
-            cols = _charfold_simhash_fn(texts, _bases)
-            return pd.concat(
-                {f"s{i}": c for i, c in enumerate(cols)}, axis=1
-            )
-
-        _CHARFOLD_SIMHASH_UDFS[key] = F.pandas_udf(_fn, schema)
-    return _CHARFOLD_SIMHASH_UDFS[key](text)
-
-
-_SIMHASH_VOTES_UDF = None
+    ddl = ", ".join(f"s{i} long" for i in range(len(bases)))
+    return K.pandas_udf(_charfold_simhash_fn, ddl, tuple(bases))(text)
 
 
 def simhash(text: Column, token_col_hash_bits: int = 64) -> Column:
@@ -1289,12 +1113,7 @@ def simhash(text: Column, token_col_hash_bits: int = 64) -> Column:
         raise ValueError("simhash supports only 64-bit signatures")
     toks = F.split(F.trim(F.lower(text)), r"\s+")
     hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    global _SIMHASH_VOTES_UDF
-    if _SIMHASH_VOTES_UDF is None:
-        from pyspark.sql.types import LongType
-
-        _SIMHASH_VOTES_UDF = F.pandas_udf(_simhash_votes_fn, LongType())
-    return _SIMHASH_VOTES_UDF(hashes)
+    return K.pandas_udf(_simhash_votes_fn, "long")(hashes)
 
 
 def simhash_signatures(
@@ -1560,9 +1379,10 @@ def _positional_gram_hashes(
     :func:`shared_ngram_runs`, one vectorized numpy pass per Arrow batch
     (r11, guide §4.2 + §2.3). The replaced JVM chain built every gram
     STRING (interpreted transform + array_join over slices) and then
-    xxhash64-ed it; here token hashes are a batched byte-polynomial and
-    each gram hash is the base-power combination of its k token hashes
-    (uint64 wrap arithmetic) — gram strings never materialize.
+    xxhash64-ed it; here token hashes are a batched code-point
+    polynomial (:func:`kernels.segment_poly_hash`) and each gram hash
+    is the base-power combination of its k token hashes (uint64 wrap
+    arithmetic) — gram strings never materialize.
 
     Semantics: tokens are ``text.split(" ")`` (the operator's exact
     split — single space, empties kept); space-free tokens make
@@ -1573,83 +1393,35 @@ def _positional_gram_hashes(
     value-identical at all 3 SFs. Docs with < k tokens emit nothing
     (the operator's filter). ``pos`` is 1-based."""
     import numpy as np
-    import pyarrow as pa
 
-    B_TOK = np.uint64(1000003)
-    B_GRAM = np.uint64(0x9E3779B97F4A7C15)
-    ddl = f"{id_col} long, pos int, g long"
-    schema = pa.schema(
-        [
-            pa.field(id_col, pa.int64()),
-            pa.field("pos", pa.int32()),
-            pa.field("g", pa.int64()),
-        ]
+    # weight of token j in a k-gram: base^(k-1-j)
+    gpow = K.powers(0x9E3779B97F4A7C15, k, 64)[::-1]
+
+    def grams(batch):
+        ids = batch.column(id_col).to_pylist()
+        txts = batch.column(text_col).to_pylist()
+        toks_per_doc = [t.split(" ") if t is not None else [] for t in txts]
+        # token hashes: code-point polynomial, +1 so an empty token != 0
+        units, lens = K.code_units([t for w in toks_per_doc for t in w])
+        th = K.segment_poly_hash(units, lens, 1000003, 64) + np.uint64(1)
+        out: dict = {id_col: [], "pos": [], "g": []}
+        off = 0
+        for did, w in zip(ids, toks_per_doc):
+            n = len(w)
+            if n >= k:
+                dth = th[off:off + n]
+                H = np.zeros(n - k + 1, dtype=np.uint64)
+                for j in range(k):
+                    H += dth[j:j + n - k + 1] * gpow[j]
+                out[id_col].extend([did] * len(H))
+                out["pos"].extend(range(1, len(H) + 1))
+                out["g"].extend(H.view(np.int64).tolist())
+            off += n
+        return out
+
+    return K.map_batches(
+        docs.select(id_col, text_col), f"{id_col} long, pos int, g long", grams
     )
-    gpow = np.empty(k, dtype=np.uint64)
-    gpow[k - 1] = 1
-    for j in range(k - 2, -1, -1):
-        gpow[j] = gpow[j + 1] * B_GRAM
-
-    def emit(batches):
-        for batch in batches:
-            ids = batch.column(id_col).to_pylist()
-            txts = batch.column(text_col).to_pylist()
-            out_id: list = []
-            out_pos: list = []
-            out_g: list = []
-            toks_per_doc = [
-                (t or "").split(" ") if t is not None else [] for t in txts
-            ]
-            all_toks = [t for w in toks_per_doc for t in w]
-            # batched token hashes: byte polynomial in uint64
-            th = np.zeros(len(all_toks), dtype=np.uint64)
-            if all_toks:
-                lens = np.array([len(t) for t in all_toks], dtype=np.int64)
-                buf = np.frombuffer(
-                    "".join(all_toks).encode("utf-8"), dtype=np.uint8
-                ).astype(np.uint64)
-                if len(buf) != int(lens.sum()):  # non-ASCII: re-measure lens
-                    blens = np.array(
-                        [len(t.encode("utf-8")) for t in all_toks],
-                        dtype=np.int64,
-                    )
-                    lens = blens
-                ends = np.cumsum(lens)
-                starts = ends - lens
-                maxlen = int(lens.max()) if len(lens) else 1
-                powtab = np.empty(max(maxlen, 1), dtype=np.uint64)
-                powtab[0] = 1
-                for i in range(1, maxlen):
-                    powtab[i] = powtab[i - 1] * B_TOK
-                tok_idx = np.repeat(
-                    np.arange(len(all_toks), dtype=np.int64), lens
-                )
-                e = ends[tok_idx] - 1 - np.arange(len(buf), dtype=np.int64)
-                contrib = buf * powtab[e]
-                ne = lens > 0
-                if ne.any():
-                    sums = np.zeros(len(all_toks), dtype=np.uint64)
-                    sums[ne] = np.add.reduceat(contrib, starts[ne])
-                    th = sums + np.uint64(1)  # +1: empty token hash != 0
-                else:
-                    th = np.full(len(all_toks), np.uint64(1))
-            off = 0
-            for did, w in zip(ids, toks_per_doc):
-                n = len(w)
-                if n >= k:
-                    dth = th[off:off + n]
-                    H = np.zeros(n - k + 1, dtype=np.uint64)
-                    for j in range(k):
-                        H += dth[j:j + n - k + 1] * gpow[j]
-                    out_id.extend([did] * len(H))
-                    out_pos.extend(range(1, len(H) + 1))
-                    out_g.extend(H.view(np.int64).tolist())
-                off += n
-            yield pa.RecordBatch.from_pydict(
-                {id_col: out_id, "pos": out_pos, "g": out_g}, schema=schema
-            )
-
-    return docs.select(id_col, text_col).mapInArrow(emit, ddl)
 
 
 def shared_ngram_runs(
@@ -1677,7 +1449,7 @@ def shared_ngram_runs(
 
     r11 (guide §4.2): the positional gram hashes come from ONE
     vectorized Arrow pass (:func:`_positional_gram_hashes` — rolling
-    base-power combination of batched token byte-hashes; gram strings
+    base-power combination of batched token code-point hashes; gram strings
     never materialize). Same 64-bit-hash join-key semantics as the
     xxhash64(gram) it replaces; output oracled value-identical at 3
     SFs."""

@@ -13,6 +13,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from etl_data_processor_spark.ops import kernels as K
+
 # Tiny per-language stopword seeds for heuristic language ID. Deliberately
 # small: the point is the Spark shape (literal arrays + overlap scoring),
 # not lexicon quality.
@@ -71,19 +73,9 @@ def _char_entropy_q12_fn(texts):
     return pd.Series(out, dtype="Int64")
 
 
-_CHAR_ENTROPY_UDF = None
-
-
 def char_entropy_q12(text: Column) -> Column:
-    """Column form of :func:`_char_entropy_q12_fn` (the pandas UDF is
-    built lazily — decorating at import time would parse the return
-    type before any session exists)."""
-    global _CHAR_ENTROPY_UDF
-    if _CHAR_ENTROPY_UDF is None:
-        from pyspark.sql.types import LongType
-
-        _CHAR_ENTROPY_UDF = F.pandas_udf(_char_entropy_q12_fn, LongType())
-    return _CHAR_ENTROPY_UDF(text)
+    """Column form of :func:`_char_entropy_q12_fn`."""
+    return K.pandas_udf(_char_entropy_q12_fn, "long")(text)
 
 
 def token_count(text: Column) -> Column:
@@ -360,7 +352,6 @@ def symdelete_hash_arrays(name_col: str) -> Column:
     from pyspark.sql.types import ArrayType, LongType
 
     B = 0x100000001B3  # FNV-64 prime as the polynomial base
-    M64 = 0xFFFFFFFFFFFFFFFF
 
     pair_cache: dict = {}
 
@@ -373,25 +364,14 @@ def symdelete_hash_arrays(name_col: str) -> Column:
         return hit
 
     def mix(h, out_len: int):
-        # variant-length salt + splitmix64 finalizer
-        z = h ^ (np.uint64(out_len) << np.uint64(58))
-        z = z ^ (z >> np.uint64(30))
-        z = z * np.uint64(0xBF58476D1CE4E5B9)
-        z = z ^ (z >> np.uint64(27))
-        z = z * np.uint64(0x94D049BB133111EB)
-        return z ^ (z >> np.uint64(31))
+        # variant-length salt, then the splitmix64 finalizer
+        return K.splitmix64(h ^ (np.uint64(out_len) << np.uint64(58)))
 
     def variants_for_group(chars):
         """(N, L) uint64 code points -> (N, V) variant hashes, V =
         1 + L + L(L-1)/2, unsorted, undeduped."""
         n, length = chars.shape
-        # powers in Python ints (numpy warns on SCALAR uint overflow;
-        # the array wraparound below is silent by design)
-        acc, pws = 1, [1]
-        for _ in range(length):
-            acc = (acc * B) & M64
-            pws.append(acc)
-        pw = np.array(pws, dtype=np.uint64)
+        pw = K.powers(B, length + 1, 64)
         P = np.empty((n, length + 1), dtype=np.uint64)
         P[:, 0] = np.uint64(0)
         for t in range(length):
@@ -419,20 +399,17 @@ def symdelete_hash_arrays(name_col: str) -> Column:
         return np.concatenate(cols, axis=1)
 
     def _hashes(s):
-        n = len(s)
         names = ["" if x is None else x for x in s.tolist()]
-        lens = np.fromiter((len(x) for x in names), dtype=np.int64, count=n)
-        out = [None] * n
+        units, lens = K.code_units(names)
+        starts = np.cumsum(lens) - lens
+        out = [None] * len(names)
         for length in np.unique(lens):
             sel = np.flatnonzero(lens == length)
             if length == 0:
                 uniq = mix(np.zeros((len(sel), 1), dtype=np.uint64), 0)
                 keep = np.ones(uniq.shape, dtype=bool)
             else:
-                grp = [names[t] for t in sel]
-                chars = np.frombuffer(
-                    "".join(grp).encode("utf-32-le"), dtype=np.uint32
-                ).reshape(len(sel), int(length)).astype(np.uint64)
+                chars = units[starts[sel, None] + np.arange(length)]
                 h = variants_for_group(chars)
                 # per-row array_distinct: sort + change mask
                 uniq = np.sort(h, axis=1)
@@ -1155,115 +1132,44 @@ def token_poly_bucket_counts(
     stream — the dominant stage of q_selection_pipeline's DSIR leg.
 
     Exactness: tokens from ``str.split()`` (== tokenize's trim+\\s+ on
-    this corpus, the proven equivalence); the fold is exact uint64
-    arithmetic (code * 31^j sums < 2^51 before each mod; non-ASCII
-    falls back to the exact scalar fold, ord == the codepoint
-    ``ascii()`` returns); bucket = h % mod on the non-negative 32-bit
-    fold == pmod. Counts are exact integers; the caller's aggregates
-    and joins stay in the JVM.
+    this corpus, the proven equivalence); the fold runs over the
+    tokens' code points (:func:`kernels.segment_poly_hash`, exact mod
+    2^32 for every code point; JVM parity holds for BMP characters,
+    whose code point is what ``ascii()`` returns); bucket = h % mod on
+    the non-negative 32-bit fold == pmod. Counts are exact integers;
+    the caller's aggregates and joins stay in the JVM.
 
     Output: ``(key, bucket long, c long)`` rows when ``key_col`` is
     given (per-key bucket counts, <= mod rows per key per batch), else
     ``(bucket long, c long)``.
     """
-    from collections import Counter
-
     import numpy as np
-    import pyarrow as pa
 
-    m32 = np.uint64(_POLY_MOD)
+    keys = [key_col] if key_col else []
 
-    def _hashes(all_toks: list) -> "np.ndarray":
-        joined = "".join(all_toks)
-        tok_lens = np.array([len(t) for t in all_toks], dtype=np.int64)
-        try:
-            buf = np.frombuffer(joined.encode("ascii"), dtype=np.uint8).astype(
-                np.uint64
-            )
-        except UnicodeEncodeError:
-            out = np.empty(len(all_toks), dtype=np.uint64)
-            for i, t in enumerate(all_toks):
-                h = 0
-                for c in t:
-                    h = (h * 31 + ord(c)) % _POLY_MOD
-                out[i] = h
-            return out
-        tok_ends = np.cumsum(tok_lens)
-        tok_starts = tok_ends - tok_lens
-        maxlen = int(tok_lens.max()) if len(tok_lens) else 1
-        powtab = np.empty(max(maxlen, 1), dtype=np.uint64)
-        powtab[0] = 1
-        for i in range(1, maxlen):
-            powtab[i] = (powtab[i - 1] * np.uint64(31)) % m32
-        tok_idx = np.repeat(np.arange(len(all_toks), dtype=np.int64), tok_lens)
-        e = tok_ends[tok_idx] - 1 - np.arange(len(buf), dtype=np.int64)
-        contrib = buf * powtab[e]
-        hs = np.zeros(len(all_toks), dtype=np.uint64)
-        ne = tok_lens > 0
-        if ne.any():
-            hs[ne] = np.add.reduceat(contrib, tok_starts[ne]) % m32
-        return hs
-
-    if key_col is not None:
-        ddl = f"{key_col} {key_ddl}, bucket long, c long"
-        schema = pa.schema(
-            [
-                pa.field(key_col, pa.int64() if key_ddl == "long" else pa.string()),
-                pa.field("bucket", pa.int64()),
-                pa.field("c", pa.int64()),
-            ]
+    def count(batch):
+        txts = batch.column(text_col).to_pylist()
+        owners = batch.column(key_col).to_pylist() if key_col else [0] * len(txts)
+        dense: dict = {}  # batch-local id per distinct key
+        toks: list = []
+        own: list = []
+        for kv, t in zip(owners, txts):
+            w = (t or "").split()
+            toks.extend(w)
+            own.extend([dense.setdefault(kv, len(dense))] * len(w))
+        bks = K.segment_poly_hash(*K.code_units(toks), 31, 32) % np.uint64(mod)
+        cell, c = np.unique(
+            np.array(own, dtype=np.int64) * mod + bks.astype(np.int64),
+            return_counts=True,
         )
+        out = {"bucket": (cell % mod).tolist(), "c": c.tolist()}
+        if key_col:
+            uniq = list(dense)
+            out[key_col] = [uniq[i] for i in (cell // mod).tolist()]
+        return out
 
-        def emit(batches):
-            for batch in batches:
-                keys = batch.column(key_col).to_pylist()
-                txts = batch.column(text_col).to_pylist()
-                toks: list = []
-                owners: list = []
-                for kv, t in zip(keys, txts):
-                    w = (t or "").split()
-                    toks.extend(w)
-                    owners.extend([kv] * len(w))
-                cnt: Counter = Counter()
-                if toks:
-                    bks = (_hashes(toks) % np.uint64(mod)).astype(np.int64)
-                    for kv, bk in zip(owners, bks.tolist()):
-                        cnt[(kv, bk)] += 1
-                ks, bs, cs = [], [], []
-                for (kv, bk), c in cnt.items():
-                    ks.append(kv)
-                    bs.append(bk)
-                    cs.append(c)
-                yield pa.RecordBatch.from_pydict(
-                    {key_col: ks, "bucket": bs, "c": cs}, schema=schema
-                )
-
-        return docs.select(key_col, text_col).mapInArrow(emit, ddl)
-
-    ddl = "bucket long, c long"
-    schema = pa.schema(
-        [pa.field("bucket", pa.int64()), pa.field("c", pa.int64())]
-    )
-
-    def emit0(batches):
-        for batch in batches:
-            txts = batch.column(text_col).to_pylist()
-            toks = []
-            for t in txts:
-                toks.extend((t or "").split())
-            if toks:
-                bks = (_hashes(toks) % np.uint64(mod)).astype(np.int64)
-                vals, counts = np.unique(bks, return_counts=True)
-                yield pa.RecordBatch.from_pydict(
-                    {"bucket": vals.tolist(), "c": counts.tolist()},
-                    schema=schema,
-                )
-            else:
-                yield pa.RecordBatch.from_pydict(
-                    {"bucket": [], "c": []}, schema=schema
-                )
-
-    return docs.select(text_col).mapInArrow(emit0, ddl)
+    ddl = ", ".join([f"{k} {key_ddl}" for k in keys] + ["bucket long", "c long"])
+    return K.map_batches(docs.select(*keys, text_col), ddl, count)
 
 
 def pair_clip_gram_counts(
@@ -1306,21 +1212,12 @@ def pair_clip_gram_counts(
     """
     from collections import Counter
 
-    import pyarrow as pa
-
     token_mode = mode == "token"
-    fields = [
-        pa.field("source", pa.string()),
-        pa.field("n", pa.int32()),
-        pa.field("m", pa.int64()),
-        pa.field("t_ref", pa.int64()),
-        pa.field("t_cand", pa.int64()),
-    ]
-    if token_mode:
-        fields += [pa.field("lc", pa.int64()), pa.field("lr", pa.int64())]
-    out_schema = pa.schema(fields)
     ddl = "source string, n int, m long, t_ref long, t_cand long" + (
         ", lc long, lr long" if token_mode else ""
+    )
+    names = ["source", "n", "m", "t_ref", "t_cand"] + (
+        ["lc", "lr"] if token_mode else []
     )
 
     def counts(units, n, memo=None, key=None):
@@ -1341,42 +1238,41 @@ def pair_clip_gram_counts(
             memo[(key, n)] = c
         return c
 
-    def score(batches):
-        for batch in batches:
-            src = batch.column("source").to_pylist()
-            rid = batch.column("rid").to_pylist()
-            ctxt = batch.column("__c").to_pylist()
-            rtxt = batch.column("__r").to_pylist()
-            memo: dict = {}
-            out = {f.name: [] for f in fields}
-            for s, r, ct, rt in zip(src, rid, ctxt, rtxt):
-                ct, rt = ct or "", rt or ""  # null text == no grams
-                cu = ct.split() if token_mode else ct
-                ru = rt.split() if token_mode else rt
-                for n in orders:
-                    cc = counts(cu, n)
-                    rc = counts(ru, n, memo, r)
-                    if len(cc) < len(rc):
-                        m = sum(
-                            min(k_c, rc[g])
-                            for g, k_c in cc.items() if g in rc
-                        )
-                    else:
-                        m = sum(
-                            min(k_r, cc[g])
-                            for g, k_r in rc.items() if g in cc
-                        )
-                    out["source"].append(s)
-                    out["n"].append(n)
-                    out["m"].append(m)
-                    out["t_ref"].append(sum(rc.values()))
-                    out["t_cand"].append(sum(cc.values()))
-                    if token_mode:
-                        out["lc"].append(len(cu))
-                        out["lr"].append(len(ru))
-            yield pa.RecordBatch.from_pydict(out, schema=out_schema)
+    def score(batch):
+        src = batch.column("source").to_pylist()
+        rid = batch.column("rid").to_pylist()
+        ctxt = batch.column("__c").to_pylist()
+        rtxt = batch.column("__r").to_pylist()
+        memo: dict = {}
+        out: dict = {name: [] for name in names}
+        for s, r, ct, rt in zip(src, rid, ctxt, rtxt):
+            ct, rt = ct or "", rt or ""  # null text == no grams
+            cu = ct.split() if token_mode else ct
+            ru = rt.split() if token_mode else rt
+            for n in orders:
+                cc = counts(cu, n)
+                rc = counts(ru, n, memo, r)
+                if len(cc) < len(rc):
+                    m = sum(
+                        min(k_c, rc[g])
+                        for g, k_c in cc.items() if g in rc
+                    )
+                else:
+                    m = sum(
+                        min(k_r, cc[g])
+                        for g, k_r in rc.items() if g in cc
+                    )
+                out["source"].append(s)
+                out["n"].append(n)
+                out["m"].append(m)
+                out["t_ref"].append(sum(rc.values()))
+                out["t_cand"].append(sum(cc.values()))
+                if token_mode:
+                    out["lc"].append(len(cu))
+                    out["lr"].append(len(ru))
+        return out
 
-    return pairs_txt.mapInArrow(score, ddl)
+    return K.map_batches(pairs_txt, ddl, score)
 
 
 def doc_grams_arrow(
@@ -1425,129 +1321,59 @@ def doc_grams_arrow(
     """
     from collections import Counter
 
-    import pyarrow as pa
+    keys = [key_col] if key_col else []
+    n0 = orders[0]
 
-    if shape == "batch_counts" and key_col is None:
-        # keyless variant: corpus-global gram-occurrence counts per batch
-        ddl = "n int, g string, c long"
-        schema = pa.schema(
-            [
-                pa.field("n", pa.int32()),
-                pa.field("g", pa.string()),
-                pa.field("c", pa.int64()),
-            ]
-        )
+    def docs_of(batch):
+        txts = batch.column(text_col).to_pylist()
+        kvs = batch.column(key_col).to_pylist() if key_col else [None] * len(txts)
+        return [(kv, (t or "").split()) for kv, t in zip(kvs, txts)]
 
-        def emit_k0(batches):
-            for batch in batches:
-                txts = batch.column(text_col).to_pylist()
-                cnt: Counter = Counter()
-                for t in txts:
-                    w = (t or "").split()
-                    top = len(w) + 1
-                    for n in orders:
-                        for i in range(top - n):
-                            cnt[(n, " ".join(w[i:i + n]))] += 1
-                ns, gs, cs = [], [], []
-                for (n, g), c in cnt.items():
-                    ns.append(n)
-                    gs.append(g)
-                    cs.append(c)
-                yield pa.RecordBatch.from_pydict(
-                    {"n": ns, "g": gs, "c": cs}, schema=schema
-                )
-
-        return docs.select(text_col).mapInArrow(emit_k0, ddl)
+    def grams(w, n):
+        return (" ".join(w[i:i + n]) for i in range(len(w) - n + 1))
 
     if shape == "batch_counts":
-        ddl = f"{key_col} {key_ddl}, n int, g string, c long"
-        schema = pa.schema(
-            [
-                pa.field(key_col, pa.int64() if key_ddl == "long" else pa.string()),
-                pa.field("n", pa.int32()),
-                pa.field("g", pa.string()),
-                pa.field("c", pa.int64()),
-            ]
-        )
+        cols = "n int, g string, c long"
 
-        def emit(batches):
-            for batch in batches:
-                keys = batch.column(key_col).to_pylist()
-                txts = batch.column(text_col).to_pylist()
-                cnt: Counter = Counter()
-                for k, t in zip(keys, txts):
-                    w = (t or "").split()
-                    top = len(w) + 1
-                    for n in orders:
-                        for i in range(top - n):
-                            cnt[(k, n, " ".join(w[i:i + n]))] += 1
-                ks, ns, gs, cs = [], [], [], []
-                for (k, n, g), c in cnt.items():
-                    ks.append(k)
-                    ns.append(n)
-                    gs.append(g)
-                    cs.append(c)
-                yield pa.RecordBatch.from_pydict(
-                    {key_col: ks, "n": ns, "g": gs, "c": cs}, schema=schema
-                )
+        def fn(batch):
+            cnt = Counter(
+                (kv, n, g)
+                for kv, w in docs_of(batch) for n in orders for g in grams(w, n)
+            )
+            kvs, ns, gs = (list(x) for x in zip(*cnt)) if cnt else ([], [], [])
+            out = {"n": ns, "g": gs, "c": list(cnt.values())}
+            if key_col:
+                out[key_col] = kvs
+            return out
 
     elif shape == "doc_distinct":
-        n0 = orders[0]
-        ddl = f"{key_col} {key_ddl}, g string"
-        schema = pa.schema(
-            [
-                pa.field(key_col, pa.int64() if key_ddl == "long" else pa.string()),
-                pa.field("g", pa.string()),
-            ]
-        )
+        cols = "g string"
 
-        def emit(batches):
-            for batch in batches:
-                keys = batch.column(key_col).to_pylist()
-                txts = batch.column(text_col).to_pylist()
-                ks, gs = [], []
-                for k, t in zip(keys, txts):
-                    w = (t or "").split()
-                    seen = {
-                        " ".join(w[i:i + n0]) for i in range(len(w) - n0 + 1)
-                    }
-                    ks.extend([k] * len(seen))
-                    gs.extend(seen)
-                yield pa.RecordBatch.from_pydict(
-                    {key_col: ks, "g": gs}, schema=schema
-                )
+        def fn(batch):
+            out: dict = {key_col: [], "g": []}
+            for kv, w in docs_of(batch):
+                seen = set(grams(w, n0))
+                out[key_col].extend([kv] * len(seen))
+                out["g"].extend(seen)
+            return out
 
     elif shape == "doc_counts":
-        n0 = orders[0]
-        ddl = f"{key_col} {key_ddl}, n_grams long"
-        schema = pa.schema(
-            [
-                pa.field(key_col, pa.int64() if key_ddl == "long" else pa.string()),
-                pa.field("n_grams", pa.int64()),
-            ]
-        )
+        cols = "n_grams long"
 
-        def emit(batches):
-            for batch in batches:
-                keys = batch.column(key_col).to_pylist()
-                txts = batch.column(text_col).to_pylist()
-                ks, cs = [], []
-                for k, t in zip(keys, txts):
-                    w = (t or "").split()
-                    nd = len({
-                        " ".join(w[i:i + n0]) for i in range(len(w) - n0 + 1)
-                    })
-                    if nd:
-                        ks.append(k)
-                        cs.append(nd)
-                yield pa.RecordBatch.from_pydict(
-                    {key_col: ks, "n_grams": cs}, schema=schema
-                )
+        def fn(batch):
+            out: dict = {key_col: [], "n_grams": []}
+            for kv, w in docs_of(batch):
+                nd = len(set(grams(w, n0)))
+                if nd:
+                    out[key_col].append(kv)
+                    out["n_grams"].append(nd)
+            return out
 
     else:  # pragma: no cover - programming error
         raise ValueError(f"unknown shape {shape!r}")
 
-    return docs.select(key_col, text_col).mapInArrow(emit, ddl)
+    ddl = ", ".join([f"{k} {key_ddl}" for k in keys] + [cols])
+    return K.map_batches(docs.select(*keys, text_col), ddl, fn)
 
 
 def span_corrupt_t5(docs: DataFrame, salt: int, mod: int) -> DataFrame:
@@ -1572,7 +1398,6 @@ def span_corrupt_t5(docs: DataFrame, salt: int, mod: int) -> DataFrame:
     doc: ``(doc_id, n_tokens, n_masked, n_spans, inputs, targets)``.
     """
     import numpy as np
-    import pyarrow as pa
 
     from etl_data_processor_spark.ops.sampling import M32, _A1, _A2
 
@@ -1583,65 +1408,54 @@ def span_corrupt_t5(docs: DataFrame, salt: int, mod: int) -> DataFrame:
     s13 = np.uint64(13)
 
     names = ["doc_id", "n_tokens", "n_masked", "n_spans", "inputs", "targets"]
-    out_schema = pa.schema(
-        [
-            pa.field("doc_id", pa.int64()),
-            pa.field("n_tokens", pa.int64()),
-            pa.field("n_masked", pa.int64()),
-            pa.field("n_spans", pa.int64()),
-            pa.field("inputs", pa.string()),
-            pa.field("targets", pa.string()),
-        ]
-    )
     ddl = (
         "doc_id long, n_tokens long, n_masked long, n_spans long, "
         "inputs string, targets string"
     )
 
-    def transform(batches):
-        for batch in batches:
-            ids = batch.column("doc_id").to_pylist()
-            txts = batch.column("text").to_pylist()
-            out: dict = {k: [] for k in names}
-            for did, txt in zip(ids, txts):
-                toks = (txt or "").split()
-                nt = len(toks)
-                if nt == 0:
-                    continue
-                # hash32(doc_id * salt + pos) % mod == 0, pos = 1..nt
-                key = np.arange(1, nt + 1, dtype=np.uint64) + np.uint64(
-                    did * salt
-                )
-                h = key & mask32
-                h = (h * a1) & mask32
-                h = h ^ (h >> s16)
-                h = (h * a2) & mask32
-                h = h ^ (h >> s13)
-                masked = (h % np.uint64(mod)) == 0
-                prev = np.empty_like(masked)
-                prev[0] = False
-                prev[1:] = masked[:-1]
-                span_start = masked & ~prev
-                span_id = np.cumsum(span_start) - 1
-                inp: list = []
-                tgt: list = []
-                for t, mk, st, sid in zip(
-                    toks, masked.tolist(), span_start.tolist(),
-                    span_id.tolist(),
-                ):
-                    if not mk:
-                        inp.append(t)
-                    elif st:
-                        inp.append(f"<extra_id_{sid}>")
-                        tgt.append(f"<extra_id_{sid}> {t}")
-                    else:
-                        tgt.append(t)
-                out["doc_id"].append(did)
-                out["n_tokens"].append(nt)
-                out["n_masked"].append(int(masked.sum()))
-                out["n_spans"].append(int(span_start.sum()))
-                out["inputs"].append(" ".join(inp))
-                out["targets"].append(" ".join(tgt))
-            yield pa.RecordBatch.from_pydict(out, schema=out_schema)
+    def transform(batch):
+        ids = batch.column("doc_id").to_pylist()
+        txts = batch.column("text").to_pylist()
+        out: dict = {k: [] for k in names}
+        for did, txt in zip(ids, txts):
+            toks = (txt or "").split()
+            nt = len(toks)
+            if nt == 0:
+                continue
+            # hash32(doc_id * salt + pos) % mod == 0, pos = 1..nt
+            key = np.arange(1, nt + 1, dtype=np.uint64) + np.uint64(
+                did * salt
+            )
+            h = key & mask32
+            h = (h * a1) & mask32
+            h = h ^ (h >> s16)
+            h = (h * a2) & mask32
+            h = h ^ (h >> s13)
+            masked = (h % np.uint64(mod)) == 0
+            prev = np.empty_like(masked)
+            prev[0] = False
+            prev[1:] = masked[:-1]
+            span_start = masked & ~prev
+            span_id = np.cumsum(span_start) - 1
+            inp: list = []
+            tgt: list = []
+            for t, mk, st, sid in zip(
+                toks, masked.tolist(), span_start.tolist(),
+                span_id.tolist(),
+            ):
+                if not mk:
+                    inp.append(t)
+                elif st:
+                    inp.append(f"<extra_id_{sid}>")
+                    tgt.append(f"<extra_id_{sid}> {t}")
+                else:
+                    tgt.append(t)
+            out["doc_id"].append(did)
+            out["n_tokens"].append(nt)
+            out["n_masked"].append(int(masked.sum()))
+            out["n_spans"].append(int(span_start.sum()))
+            out["inputs"].append(" ".join(inp))
+            out["targets"].append(" ".join(tgt))
+        return out
 
-    return docs.mapInArrow(transform, ddl)
+    return K.map_batches(docs, ddl, transform)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -29,6 +31,18 @@ def q(name: str, sql: str | None = None):
         return fn
 
     return deco
+
+
+def load_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Import every ``queries*`` module of the package (each registers its
+    keys on import) and return the registry. Discovering the modules keeps
+    every entry point on the same key set; hand-kept import lists drifted
+    apart."""
+    pkg = __name__.rpartition(".")[0]
+    for mod in pkgutil.iter_modules(importlib.import_module(pkg).__path__):
+        if mod.name.startswith("queries"):
+            importlib.import_module(f"{pkg}.{mod.name}")
+    return QUERIES
 
 
 def cat(spark: SparkSession, sf_dir: str) -> Catalog:

@@ -268,35 +268,40 @@ def _naive_max_runs(texts: dict[int, str], k: int, min_run: int):
 def test_shared_ngram_runs_match_naive_on_planted_spans(spark):
     """Random word-soup docs with PLANTED shared spans: the relational
     islands algorithm must find exactly the naive quadratic answer
-    (pairs and max-run lengths)."""
+    (pairs and max-run lengths) — for ASCII tokens and for a span of
+    non-ASCII tokens (BMP and astral code points)."""
     from etl_data_processor_spark.ops.dedup import shared_ngram_runs
 
     rnd = random.Random(42)
-    vocab = [f"w{i}" for i in range(50)]
-
-    def soup(n):
-        return [rnd.choice(vocab) for _ in range(n)]
-
-    span = soup(20)  # the planted verbatim span (20 tokens)
-    docs = {
-        0: soup(10) + span + soup(15),
-        1: soup(5) + span + soup(3),
-        2: soup(8) + span[:14] + soup(12),  # shares only a prefix of it
-        3: soup(40),  # no planted overlap
-        4: span + span,  # repeated span (self-overlap diagonals)
-    }
-    texts = {i: " ".join(t) for i, t in docs.items()}
-    df = spark.createDataFrame(
-        list(texts.items()), "doc_id long, text string"
+    vocabs = (
+        [f"w{i}" for i in range(50)],
+        [f"{c}{i}" for i, c in enumerate("æøåÆØÅéïçñ中文字😀🎉лдж" * 3)],
     )
-    got = {
-        (r["id_a"], r["id_b"]): r["max_run"]
-        for r in shared_ngram_runs(df, k=8, min_run=12).collect()
-    }
-    want = _naive_max_runs(texts, k=8, min_run=12)
-    assert got == want, (got, want)
-    # sanity on the construction itself: the planted pairs are present
-    assert got[(0, 1)] >= 20 and (0, 4) in got
+    for vocab in vocabs:
+
+        def soup(n):
+            return [rnd.choice(vocab) for _ in range(n)]
+
+        span = soup(20)  # the planted verbatim span (20 tokens)
+        docs = {
+            0: soup(10) + span + soup(15),
+            1: soup(5) + span + soup(3),
+            2: soup(8) + span[:14] + soup(12),  # shares only a prefix of it
+            3: soup(40),  # no planted overlap
+            4: span + span,  # repeated span (self-overlap diagonals)
+        }
+        texts = {i: " ".join(t) for i, t in docs.items()}
+        df = spark.createDataFrame(
+            list(texts.items()), "doc_id long, text string"
+        )
+        got = {
+            (r["id_a"], r["id_b"]): r["max_run"]
+            for r in shared_ngram_runs(df, k=8, min_run=12).collect()
+        }
+        want = _naive_max_runs(texts, k=8, min_run=12)
+        assert got == want, (got, want)
+        # sanity on the construction itself: the planted pairs are present
+        assert got[(0, 1)] >= 20 and (0, 4) in got
 
 
 # -------------------------------------------------- distributed prefix

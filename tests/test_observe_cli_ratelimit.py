@@ -7,6 +7,7 @@ import pytest
 
 import csv
 import glob
+import os
 import time
 
 from etl_data_processor_spark.io import Catalog
@@ -55,6 +56,24 @@ def test_cli_medicines_and_list(spark, tmp_path, capsys):
         "Decision Date",
         "Indication",
     ]
+
+
+def test_cli_list_matches_driver_registry():
+    """``list`` in a fresh interpreter (no test module has filled the
+    registry yet) prints one line per key the driver contract sees."""
+    import subprocess
+    import sys
+
+    import __spark_entry__ as entry
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-m", "etl_data_processor_spark", "list"],
+        cwd=root, capture_output=True, text=True, check=True, timeout=300,
+    ).stdout
+    keys = [ln.split("\t", 1)[0] for ln in out.splitlines() if "\t" in ln]
+    assert len(keys) == len(entry.queries())
+    assert set(keys) == set(entry.queries())
 
 
 def test_cli_unknown_query(spark):

@@ -2,8 +2,8 @@
 round must produce BIT-IDENTICAL values to the expression chain it
 replaced. Each test runs the kept reference implementation next to the
 production path on the real corpus plus hostile edge rows (null text,
-empty text, whitespace-only, sub-k docs, all-ties) and asserts null-safe
-equality row by row.
+empty text, whitespace-only, sub-k docs, all-ties, non-ASCII BMP text)
+and asserts null-safe equality row by row.
 
 - word_shingles: Arrow pass vs _word_shingles_expr (split+HOF+distinct).
 - minhash signatures: numpy (a*h+b) % p per-doc mins vs the nested-HOF
@@ -32,6 +32,10 @@ EDGE_ROWS = [
     (8, "x  y   z w"),
     (9, "the the the the"),
     (10, "one two three four five six seven eight nine ten"),
+    # BMP non-ASCII: hashed over code points like every other token
+    (11, "Blå æble på Ærø"),
+    (12, "café naïve café"),
+    (13, "Lægemiddelrådet anbefaler øget brug"),
 ]
 
 
